@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** A [[ClusterOps.componentsUpdate]] window touched more distinct
   * clusters than `maxDriverRoots` — the driver-resident root collect is
@@ -30,12 +31,12 @@ class TouchedRootsOverBoundException(msg: String)
   * iteration count — the classic iterative-Spark footgun. */
 object ClusterOps {
 
-  /** Driver-side cap on the bounded fold fast path's member fetch
-    * ([[componentsUpdate]]): a window whose touched clusters hold more
-    * member rows than this falls back to the distributed fold, which
-    * never collects member lists at all. Sized so the fast path covers
-    * nightly windows (whose touched subgraphs are batch-proportional)
-    * while a giant cluster touched by one pair stays cluster-side. */
+  /** Bound of [[componentsUpdate]]'s member fetch: a window whose
+    * touched clusters hold more member rows than this takes the
+    * distributed fold, which never collects member lists at all. Sized
+    * so the driver fold covers nightly windows (whose touched subgraphs
+    * are batch-proportional) while a giant cluster touched by one pair
+    * stays cluster-side. */
   private val MaxDriverFoldMembers: Int = 1 << 16
 
   /** `pairs`: two long columns (first < second convention not required).
@@ -215,17 +216,21 @@ object ClusterOps {
     * serialize on the same per-path ingest lease as the LSH index
     * (concurrent unfenced folds could each miss the other's merges).
     *
-    * BATCH-BOUNDED CONTRACT (the [[DedupOps.minhashLshIndexProbe]]
-    * discipline): the only driver materializations are the touched-
-    * cluster ROOT sets — bounded by |batch docs|, never by corpus or
-    * membership size (member lists are collected ONLY on the bounded
-    * fast path, under the explicit [[MaxDriverFoldMembers]] head(n+1)
-    * guard; the distributed fold never collects them). That bound is
-    * a contract, not an accident: a whole-log backfill fed as ONE
-    * window would drive a corpus-scale root collect, so `maxDriverRoots`
-    * fails it loudly with windowing guidance instead of OOMing the
-    * driver — replay a backlog through windows (which is also what
-    * keeps each fold touched-cluster-proportional).
+    * BATCH-BOUNDED CONTRACT: each window starts with ONE
+    * bounded-or-materialized fetch of its pair set
+    * ([[DedupOps.boundedOrMaterialized]]); its touched-cluster ROOT set,
+    * bounded by |batch docs| and never by corpus or membership size, is
+    * the only unconditional driver materialization; then ONE
+    * bounded-or-materialized fetch of the touched members, under
+    * [[MaxDriverFoldMembers]]. When both fit, the window's delta is plain
+    * driver arithmetic (a union-find); when either is over its bound, the
+    * fetched frames feed the distributed alt-star fold. Both deltas apply
+    * through one shared tail. The root bound is a contract, not an
+    * accident: a whole-log backfill fed as ONE window would drive a
+    * corpus-scale root collect, so `maxDriverRoots` fails it loudly with
+    * windowing guidance instead of OOMing the driver — replay a backlog
+    * through windows (which is also what keeps each fold
+    * touched-cluster-proportional).
     *
     * Doc takedowns: [[keepList]]`(live)` drops dead members read-side
     * per query (the d31 pattern), and [[sweepComponents]] physically
@@ -244,201 +249,60 @@ object ClusterOps {
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
     val exists = graft.meta.CollectionMeta.collectionCommitted(p)
-    // BOUNDED DRIVER-SIDE FOLD (fast path): when the window's pair set
-    // AND the touched clusters' member rows both fit the bounded-probe
-    // discipline, the whole fold — components, changed roots, keep rows,
-    // append set — is plain driver arithmetic over two point reads of
-    // the keyed state. The distributed fold below spends ~12 actions'
-    // fixed job cost per window (pair checkpoint, root fetches, the
-    // iterative alt-star rounds, keep/append checkpoints) computing the
-    // same thing over frames of a few hundred rows — the composed
-    // loops' per-window latency floor (guide §2.4). The union-find
-    // reproduces connectedComponentsAltStar's contract exactly: cluster
-    // label = min reachable id over batch edges ∪ (member → root) star
-    // edges. Member rows are fetched ONLY under an explicit bound
-    // (head(n+1)); anything larger returns None and the distributed
-    // fold — which never collects member lists at all — runs unchanged.
-    def driverFold(): Option[Long] = {
-      val maxPairs = graft.api.Collection.MaxKeyPushdown
-      val pairRows = pairsDf.head(maxPairs + 1)
-      if (pairRows.length > maxPairs) return None
-      val edges = pairRows.map(r => (r.getLong(0), r.getLong(1)))
-      val batchDocs = edges.iterator
-        .flatMap(e => Iterator(e._1, e._2)).toSeq.distinct
-      val oldRows: Array[(Long, Long)] =
-        if (!exists || batchDocs.isEmpty) Array.empty
-        else {
-          val coll = graft.api.Collection(spark, statePath)
-          val state = coll.scanVersion(coll.version)
-          val touched = state.filter(
-            if (batchDocs.size <= maxIdPushdown)
-              col("doc_id").isin(batchDocs: _*)
-            else col("doc_id").isInCollection(batchDocs))
-            .select(col("cluster")).distinct()
-            .head(batchDocs.size + 1) // distinct roots <= |batch docs|
-          if (touched.length > batchDocs.size) return None // defensive
-          val roots = touched.map(_.getLong(0)).toSeq
-          // the maxDriverRoots CONTRACT holds on this path too (and the
-          // dedicated type keeps componentsCycle's rebuild delegation
-          // working): the fast path's roots are batch-bounded by
-          // construction, but a caller-lowered bound must still refuse
-          if (roots.size > maxDriverRoots)
-            throw new TouchedRootsOverBoundException(
-              s"hadro: componentsUpdate window touches more than " +
-                s"$maxDriverRoots distinct clusters — the root collect is " +
-                "driver-resident and bounded by |batch docs| by contract; " +
-                "fold a backfill of this size in windows instead of one " +
-                "batch (or componentsRebuild for a full pair log), or " +
-                "raise maxDriverRoots if the driver is sized for it")
-          if (roots.isEmpty) Array.empty
-          else {
-            val memb = state.filter(
-              if (roots.size <= maxIdPushdown)
-                col("cluster").isin(roots: _*)
-              else col("cluster").isInCollection(roots))
-              .select(col("doc_id"), col("cluster"))
-              .head(MaxDriverFoldMembers + 1)
-            if (memb.length > MaxDriverFoldMembers) return None
-            memb.map(r => (r.getLong(0), r.getLong(1)))
-          }
-        }
-      // union-find, min-label roots: cluster = min reachable id
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nx = parent(c); parent(c) = r; c = nx
-        }
-        r
-      }
-      def union(a: Long, b: Long): Unit = {
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
-      edges.foreach { case (a, b) => nodes += a; nodes += b; union(a, b) }
-      oldRows.foreach { case (d, c) =>
-        nodes += d; nodes += c; if (d != c) union(d, c)
-      }
-      val labels = nodes.iterator.map(n => (n, find(n))).toArray
-      val roots = oldRows.iterator.map(_._2).toSet
-      // a touched cluster re-roots atomically or not at all: changed =
-      // old roots whose own new label moved (roots only decrease)
-      val changedRoots = roots.filter(r => find(r) != r).toSeq.sorted
-      import spark.implicits._
-      keepPath.foreach { kp =>
-        val kept = labels.groupBy(_._2).iterator.map { case (c, ms) =>
-          (c, ms.iterator.map(_._1).min, ms.length.toLong)
-        }.toSeq.sorted
-        val keepExists = graft.meta.CollectionMeta.collectionCommitted(
-          java.nio.file.Paths.get(kp))
-        if (!keepExists && !exists)
-          // day 0 of the whole loop: the touched clusters ARE the state
-          kept.toDF("cluster", "keep_id", "n_members")
-            .write.format("hadro").mode("overwrite")
-            .option("hadro.key", "cluster").save(kp)
-        else {
-          // keepPath first supplied AFTER the state accumulated clusters:
-          // one-time corpus-proportional backfill (see the distributed
-          // fold below), then this window's touched rows apply as usual
-          if (!keepExists)
-            keepList(spark, statePath)
-              .write.format("hadro").mode("overwrite")
-              .option("hadro.key", "cluster").save(kp)
-          val keep = graft.api.Collection(spark, kp)
-          // ONE atomic commit for the whole window's keep maintenance
-          // (tombstones for merged-away roots + touched upserts)
-          val changes = (kept.map { case (c, k, n) =>
-            (c, Option(k), Option(n), false)
-          } ++ changedRoots.map(c =>
-            (c, Option.empty[Long], Option.empty[Long], true)))
-            .toDF("cluster", "keep_id", "n_members", "_keep_del")
-          if (changedRoots.nonEmpty || kept.nonEmpty)
-            keep.merge(changes, col("_keep_del"))
-        }
-      }
-      // rows that stand: members of UNchanged clusters — everything else
-      // (fresh docs, re-rooted members) appends
-      val changedSet = changedRoots.toSet
-      val unchangedDocs = oldRows.iterator
-        .filter(r => !changedSet.contains(r._2)).map(_._1).toSet
-      val toAppend = labels.filter(l => !unchangedDocs.contains(l._1))
-      val appended = toAppend.length.toLong
-      if (appended > 0)
-        toAppend.toSeq.toDF("doc_id", "cluster")
-          .write.format("hadro")
-          .mode(if (exists) "append" else "overwrite")
-          .option("hadro.key", "doc_id").save(statePath)
-      if (changedRoots.nonEmpty) {
-        val cond =
-          if (changedRoots.size <= maxIdPushdown)
-            col("cluster").isin(changedRoots: _*)
-          else col("cluster").isInCollection(changedRoots)
-        graft.spark.HadroDeleteSupport.dvDeleteWhere(p, cond)
-      }
-      if (exists || appended > 0) {
-        DedupOps.maybeCompactIndex(
-          graft.api.Collection(spark, statePath), maxStateFiles)
-        keepPath.foreach(kp => DedupOps.maybeCompactIndex(
-          graft.api.Collection(spark, kp), maxStateFiles))
-      }
-      Some(appended)
+    lazy val state = {
+      val coll = graft.api.Collection(spark, statePath)
+      coll.scanVersion(coll.version)
     }
-    driverFold().getOrElse {
-    val pairs = pairsDf.localCheckpoint()
-    val batchDocs = pairs.select(col("a").as("doc_id"))
-      .unionByName(pairs.select(col("b").as("doc_id"))).distinct()
-    // current rows of every touched cluster (pinned version)
-    val old: DataFrame =
-      if (!exists) pairs.select(col("a").as("doc_id"), col("a").as("cluster")).limit(0)
-      else {
-        val coll = graft.api.Collection(spark, statePath)
-        val state = coll.scanVersion(coll.version)
+    def in(c: String, ids: Seq[Long]): Column =
+      if (ids.size <= maxIdPushdown) col(c).isin(ids: _*)
+      else col(c).isInCollection(ids)
+    val pairsW = DedupOps.boundedOrMaterialized(pairsDf,
+      graft.api.Collection.MaxKeyPushdown)
+    // current roots of every cluster the window touches (pinned version)
+    val touched: Option[DataFrame] = if (!exists) None else pairsW match {
+      case Right(rows) =>
+        val docs = rows.iterator
+          .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toSeq.distinct
+        if (docs.isEmpty) None else Some(state.filter(in("doc_id", docs)))
+      case Left(pairs) =>
         // over-bound batches take a PLAIN semi-join, never a forced
         // broadcast: a corpus-sized batch (the full-log fold
         // componentsCycle attempts before delegating to the rebuild)
-        // would OOM the driver inside an explicit broadcast() BEFORE
-        // the roots bound below could fire — AQE still auto-broadcasts
+        // would OOM the driver inside an explicit broadcast() BEFORE the
+        // roots bound below could fire — AQE still auto-broadcasts
         // genuinely small over-1000-doc batches from runtime stats
-        val touched0 = graft.api.Collection
-          .boundedKeyLits(batchDocs, maxIdPushdown)
+        val batchDocs = pairs.select(col("a").as("doc_id"))
+          .unionByName(pairs.select(col("b").as("doc_id"))).distinct()
+        Some(graft.api.Collection.boundedKeyLits(batchDocs, maxIdPushdown)
           .fold(state.join(batchDocs, Seq("doc_id"), "left_semi"))(
-            vs => state.filter(col("doc_id").isin(vs: _*)))
-        val rootRows = touched0.select(col("cluster")).distinct()
-          .head(maxDriverRoots + 1) // bounded: <= |batch docs| by contract
-        if (rootRows.length > maxDriverRoots)
-          throw new TouchedRootsOverBoundException(
-            s"hadro: componentsUpdate window touches more than " +
-              s"$maxDriverRoots distinct clusters — the root collect is " +
-              "driver-resident and bounded by |batch docs| by contract; " +
-              "fold a backfill of this size in windows instead of one " +
-              "batch (or componentsRebuild for a full pair log), or " +
-              "raise maxDriverRoots if the driver is sized for it")
-        val roots = rootRows.map(_.getLong(0)).toSeq
-        if (roots.isEmpty) state.limit(0)
-        else if (roots.size <= maxIdPushdown)
-          state.filter(col("cluster").isin(roots: _*))
-        else state.filter(col("cluster").isInCollection(roots))
-      }
-    val oldCk = old.localCheckpoint()
-    // subgraph: batch pairs + one star edge per touched member. A root's
-    // own (root, root) row drops as a self-loop; the root still joins
-    // the subgraph through its members' star edges.
-    val labels = connectedComponentsAltStar(
-      pairs.unionByName(
-        oldCk.select(col("doc_id").as("a"), col("cluster").as("b"))
-          .filter(col("a") =!= col("b"))),
-      "a", "b")
-      .select(col("node").as("doc_id"), col("cluster")).localCheckpoint()
-    // a touched cluster re-roots atomically or not at all: changed =
-    // old roots whose own new label moved (roots only decrease)
-    val changedRoots = oldCk.select(col("cluster")).distinct()
-      .join(labels.withColumnRenamed("cluster", "new_c")
-        .withColumnRenamed("doc_id", "cluster"), Seq("cluster"))
-      .filter(col("new_c") =!= col("cluster"))
-      .select(col("cluster")).collect().map(_.getLong(0)).toSeq
+            vs => state.filter(col("doc_id").isin(vs: _*))))
+    }
+    val roots: Seq[Long] = touched.fold(Seq.empty[Long]) { t =>
+      val rootRows = t.select(col("cluster")).distinct()
+        .head(maxDriverRoots + 1) // bounded: <= |batch docs| by contract
+      if (rootRows.length > maxDriverRoots)
+        throw new TouchedRootsOverBoundException(
+          s"hadro: componentsUpdate window touches more than " +
+            s"$maxDriverRoots distinct clusters — the root collect is " +
+            "driver-resident and bounded by |batch docs| by contract; " +
+            "fold a backfill of this size in windows instead of one " +
+            "batch (or componentsRebuild for a full pair log), or " +
+            "raise maxDriverRoots if the driver is sized for it")
+      rootRows.map(_.getLong(0)).toSeq
+    }
+    val membersW =
+      if (roots.isEmpty) Right(Array.empty[Row])
+      else DedupOps.boundedOrMaterialized(
+        state.filter(in("cluster", roots)).select(col("doc_id"), col("cluster")),
+        MaxDriverFoldMembers)
+    val delta = (pairsW, membersW) match {
+      case (Right(pairRows), Right(memberRows)) =>
+        driverFold(spark, pairRows, memberRows)
+      case _ =>
+        distributedFold(pairsW.fold(identity, localFrame(spark, _, "a", "b")),
+          membersW.fold(identity, localFrame(spark, _, "doc_id", "cluster")),
+          maxIdPushdown)
+    }
     // MATERIALIZED KEEP-LIST maintenance (the h96 partial-recompute
     // shape applied to d36's read): upsert exactly the TOUCHED clusters'
     // (cluster, keep_id, n_members) rows into a cluster-KEYED collection
@@ -450,18 +314,18 @@ object ClusterOps {
     // heals (delete is a no-op, upsert is LWW-idempotent) — whereas
     // maintenance after the state commit could never re-detect a merged-
     // away root on replay (the fold is a no-op then) and would leak its
-    // phantom keep row forever. labels covers EVERY member of every
+    // phantom keep row forever. The delta covers EVERY member of every
     // touched cluster, so the aggregated counts are complete; untouched
     // clusters' rows are never read or written.
     keepPath.foreach { kp =>
-      import spark.implicits._
-      val kept = keepRows(labels).localCheckpoint()
       val keepExists = graft.meta.CollectionMeta.collectionCommitted(
         java.nio.file.Paths.get(kp))
+      val changes = typed(delta.keepChanges, "cluster", "keep_id",
+        "n_members")
       if (!keepExists && !exists)
         // day 0 of the whole loop: the touched clusters ARE the state
-        kept.write.format("hadro").mode("overwrite")
-          .option("hadro.key", "cluster").save(kp)
+        // (and no root can have merged away yet)
+        save(changes, kp, "overwrite")
       else {
         // keepPath first supplied AFTER the state accumulated clusters:
         // a touched-only bootstrap would permanently miss every
@@ -470,60 +334,168 @@ object ClusterOps {
         // one-time corpus-proportional cost, then apply this window's
         // touched rows like any other window.
         if (!keepExists)
-          keepList(spark, statePath)
-            .write.format("hadro").mode("overwrite")
-            .option("hadro.key", "cluster").save(kp)
-        val keep = graft.api.Collection(spark, kp)
+          save(typed(keepList(spark, statePath), "cluster", "keep_id",
+            "n_members"), kp, "overwrite")
         // ONE atomic commit for the whole window's keep maintenance:
-        // the merged-away roots' tombstones and the touched clusters'
-        // upserts ride a single CDC merge (the h23 primitive), so no
-        // crash point can expose a keep-list with the old roots deleted
-        // but their replacement rows not yet written.
-        val changes = kept.withColumn("_keep_del", lit(false))
-          .unionByName(changedRoots.toDF("cluster")
-            .withColumn("keep_id", lit(null).cast("long"))
-            .withColumn("n_members", lit(null).cast("long"))
-            .withColumn("_keep_del", lit(true)))
-        if (changedRoots.nonEmpty || !kept.isEmpty)
-          keep.merge(changes, col("_keep_del"))
+        // the merged-away roots' tombstones (NULL keep_id — a kept row
+        // always has one) and the touched clusters' upserts ride a
+        // single CDC merge (the h23 primitive), so no crash point can
+        // expose a keep-list with the old roots deleted but their
+        // replacement rows not yet written. Any pair touches a cluster,
+        // so a window with pairs always has keep rows to upsert.
+        if (pairsW.fold(_ => true, _.nonEmpty))
+          graft.api.Collection(spark, kp).merge(changes,
+            col("keep_id").isNull)
       }
     }
-    // rows that stand: members of UNchanged clusters — everything else
-    // (fresh docs, re-rooted members) appends. Subgraph-sized join;
-    // never corpus-sized, never a member-list driver collect.
-    val unchangedOld =
-      if (changedRoots.isEmpty) oldCk
-      else if (changedRoots.size <= maxIdPushdown)
-        oldCk.filter(!col("cluster").isin(changedRoots: _*))
-      else oldCk.filter(!col("cluster").isInCollection(changedRoots))
-    val toAppend = labels
-      .join(unchangedOld.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val appended = toAppend.count()
-    if (appended > 0)
-      toAppend.write.format("hadro")
-        .mode(if (exists) "append" else "overwrite")
-        .option("hadro.key", "doc_id").save(statePath)
-    if (changedRoots.nonEmpty) {
-      val cond =
-        if (changedRoots.size <= maxIdPushdown)
-          col("cluster").isin(changedRoots: _*)
-        else col("cluster").isInCollection(changedRoots)
-      graft.spark.HadroDeleteSupport.dvDeleteWhere(p, cond)
-    }
+    if (delta.appended > 0)
+      save(typed(delta.toAppend, "doc_id", "cluster"), statePath,
+        if (exists) "append" else "overwrite")
+    if (delta.changedRoots.nonEmpty)
+      graft.spark.HadroDeleteSupport.dvDeleteWhere(p,
+        in("cluster", delta.changedRoots))
     // bounded small segments, the LSH-index discipline: a nightly loop
     // appends a few rows per window FOREVER — bin-pack (atomic replace,
     // reader-safe via deferred GC) once the segment count crosses the
     // threshold, or the state scan's open cost grows without bound
-    if (exists || appended > 0) {
+    if (exists || delta.appended > 0) {
       DedupOps.maybeCompactIndex(
         graft.api.Collection(spark, statePath), maxStateFiles)
       keepPath.foreach(kp => DedupOps.maybeCompactIndex(
         graft.api.Collection(spark, kp), maxStateFiles))
     }
-    appended
+    delta.appended
     }
+
+  /** One [[componentsUpdate]] window's membership delta: the keep-list
+    * changes — a (cluster, keep_id, n_members) row per touched cluster
+    * plus a NULL-keep_id tombstone per merged-away root — the old roots
+    * that merged away, and the (doc_id, cluster) rows to append. */
+  private final case class FoldDelta(keepChanges: DataFrame,
+      changedRoots: Seq[Long], toAppend: DataFrame, appended: Long)
+
+  /** Keep-list changes for driver rows plus the merged-away roots. */
+  private def keepChanges(spark: org.apache.spark.sql.SparkSession,
+      kept: Seq[Row], changedRoots: Seq[Long]): DataFrame =
+    localFrame(spark, kept ++ changedRoots.map(c => Row(c, null, null)),
+      "cluster", "keep_id", "n_members")
+
+  /** The bounded delta: the window's pairs and the touched clusters'
+    * member rows are driver-resident, so the fold is a union-find. It
+    * reproduces [[connectedComponentsAltStar]]'s contract exactly:
+    * cluster label = min reachable id over batch edges ∪ (member → root)
+    * star edges. */
+  private def driverFold(spark: org.apache.spark.sql.SparkSession,
+      pairRows: Array[Row], memberRows: Array[Row]): FoldDelta = {
+    val edges = pairRows.map(r => (r.getLong(0), r.getLong(1)))
+    val oldRows = memberRows.map(r => (r.getLong(0), r.getLong(1)))
+    // union-find, min-label roots: cluster = min reachable id
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nx = parent(c); parent(c) = r; c = nx
+      }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    val nodes = scala.collection.mutable.LinkedHashSet.empty[Long]
+    edges.foreach { case (a, b) => nodes += a; nodes += b; union(a, b) }
+    oldRows.foreach { case (d, c) =>
+      nodes += d; nodes += c; if (d != c) union(d, c)
+    }
+    val labels = nodes.iterator.map(n => (n, find(n))).toArray
+    val roots = oldRows.iterator.map(_._2).toSet
+    // a touched cluster re-roots atomically or not at all: changed =
+    // old roots whose own new label moved (roots only decrease)
+    val changedRoots = roots.filter(r => find(r) != r).toSeq.sorted
+    val kept = labels.groupBy(_._2).iterator.map { case (c, ms) =>
+      (c, ms.iterator.map(_._1).min, ms.length.toLong)
+    }.toSeq.sorted.map { case (c, k, n) => Row(c, k, n) }
+    // rows that stand: members of UNchanged clusters — everything else
+    // (fresh docs, re-rooted members) appends
+    val changedSet = changedRoots.toSet
+    val unchangedDocs = oldRows.iterator
+      .filter(r => !changedSet.contains(r._2)).map(_._1).toSet
+    val toAppend = labels.collect {
+      case (d, c) if !unchangedDocs.contains(d) => Row(d, c)
+    }
+    FoldDelta(keepChanges(spark, kept, changedRoots), changedRoots,
+      localFrame(spark, toAppend, "doc_id", "cluster"), toAppend.length.toLong)
   }
+
+  /** The over-bound delta: components over the SUBGRAPH only — the
+    * window's pairs plus one (member → root) star edge per touched
+    * member — distributed, never collecting member lists. A root's own
+    * (root, root) row drops as a self-loop; the root still joins the
+    * subgraph through its members' star edges. */
+  private def distributedFold(pairs: DataFrame, old: DataFrame,
+      maxIdPushdown: Int): FoldDelta = {
+    val labels = connectedComponentsAltStar(
+      pairs.unionByName(
+        old.select(col("doc_id").as("a"), col("cluster").as("b"))
+          .filter(col("a") =!= col("b"))),
+      "a", "b")
+      .select(col("node").as("doc_id"), col("cluster")).localCheckpoint()
+    // a touched cluster re-roots atomically or not at all: changed =
+    // old roots whose own new label moved (roots only decrease)
+    val changedRoots = old.select(col("cluster")).distinct()
+      .join(labels.withColumnRenamed("cluster", "new_c")
+        .withColumnRenamed("doc_id", "cluster"), Seq("cluster"))
+      .filter(col("new_c") =!= col("cluster"))
+      .select(col("cluster")).collect().map(_.getLong(0)).toSeq
+    // rows that stand: members of UNchanged clusters — everything else
+    // (fresh docs, re-rooted members) appends. Subgraph-sized join;
+    // never corpus-sized, never a member-list driver collect.
+    val unchangedOld =
+      if (changedRoots.isEmpty) old
+      else if (changedRoots.size <= maxIdPushdown)
+        old.filter(!col("cluster").isin(changedRoots: _*))
+      else old.filter(!col("cluster").isInCollection(changedRoots))
+    val toAppend = labels
+      .join(unchangedOld.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .localCheckpoint()
+    FoldDelta(keepRows(labels).unionByName(
+      keepChanges(labels.sparkSession, Nil, changedRoots)),
+      changedRoots, toAppend, toAppend.count())
+  }
+
+  /** All-long schema with every column nullable. */
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType)))
+
+  /** Driver rows as a frame of [[longs]] columns. */
+  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: Iterable[Row], names: String*): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*),
+      longs(names: _*))
+
+  /** The ONE typed projection every loop output is written through: long
+    * columns, the first (the key) non-null and the rest nullable — keep-
+    * list tombstones carry NULL keep_id. Rebuilding the frame over its
+    * rows fixes that schema, so the stored schema of the state, keep-list
+    * and drop list is the same whichever path computed the rows; a
+    * plan-level projection would not, since nullability follows the plan
+    * (an inferred IS NOT NULL makes a column non-null). */
+  private def typed(df: DataFrame, key: String, cols: String*): DataFrame = {
+    val schema = StructType(StructField(key, LongType, nullable = false) +:
+      longs(cols: _*).fields.toSeq)
+    val n = schema.length
+    val rows = df.select(schema.fieldNames.toSeq.map(c =>
+      col(c).cast(LongType)): _*).queryExecution.toRdd.map(r =>
+      Row.fromSeq((0 until n).map(i => if (r.isNullAt(i)) null else r.getLong(i))))
+    df.sparkSession.createDataFrame(rows, schema)
+  }
+
+  /** Write a [[typed]] loop output keyed on its first column. */
+  private def save(df: DataFrame, path: String, mode: String): Unit =
+    df.write.format("hadro").mode(mode)
+      .option("hadro.key", df.columns.head).save(path)
 
   /** The resolved membership view for [[componentsUpdate]] state:
     * (doc_id, cluster). min() per doc soundly collapses the duplicate
@@ -997,72 +969,52 @@ object ClusterOps {
     def applyTouched(touched: DataFrame): Unit = {
       val resolved = touched
         .groupBy(col("doc_id")).agg(min(col("cluster")).as("cluster"))
-      // BOUNDED DRIVER-SIDE WINDOW (the componentsUpdate fast-path
-      // discipline): a steady window touches a few hundred docs, so ONE
-      // bounded head + ONE point read of the cluster-keyed keep-list
-      // replace the checkpoint/fetch/empty-probe action chain (~5 fixed
-      // job costs per window). The full-snapshot paths (first-cycle
-      // bootstrap, post-compaction/post-sweep re-derive) are corpus-
-      // proportional and fall through to the distributed shape below.
-      val maxT = graft.api.Collection.MaxKeyPushdown
-      val headRows = resolved.head(maxT + 1)
-      if (headRows.length <= maxT) {
-        val m = headRows.map(r => (r.getLong(0), r.getLong(1)))
-        val clusters = m.map(_._2).distinct.toSeq
-        val keepAll = keepListMaterialized(spark, keepPath)
-        val keepMap =
-          if (clusters.isEmpty) Map.empty[Long, Long]
-          else keepAll.filter(
-            if (clusters.size <= maxT) col("cluster").isin(clusters: _*)
-            else col("cluster").isInCollection(clusters))
-            .select(col("cluster"), col("keep_id")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // same loud out-of-step gate as the distributed shape below
-        if (m.exists(t => !keepMap.contains(t._2)))
-          throw new IllegalStateException(
-            s"hadro: curationCycle found touched clusters with no row in " +
-              s"the materialized keep-list at $keepPath — the keep-list is " +
-              "out of step with the membership state (a crashed " +
-              "sweepComponents between its two rewrites, or keep_dir not " +
-              "maintained by the components loop). Re-run " +
-              "sweepComponents(keepPath)/CALL system.sweep_components (or " +
-              "componentsRebuild with keepPath) to heal, then re-run this " +
-              "cycle — the cursor has not moved")
-        val changes = m.map { case (d, c) => (d, c, keepMap(c)) }
-        val dropExists = graft.meta.CollectionMeta.collectionCommitted(
-          java.nio.file.Paths.get(dropPath))
-        import spark.implicits._
-        if (!dropExists)
-          changes.filter(t => t._1 != t._3).toSeq
-            .toDF("doc_id", "cluster", "keep_id")
-            .write.format("hadro").mode("overwrite")
-            .option("hadro.key", "doc_id").save(dropPath)
-        else if (changes.nonEmpty)
-          graft.api.Collection(spark, dropPath)
-            .merge(changes.toSeq.toDF("doc_id", "cluster", "keep_id"),
-              col("doc_id") === col("keep_id"))
-        return
-      }
-      val m = resolved.localCheckpoint()
-      // keeper lookup restricted to the window's TOUCHED clusters: a
-      // bounded set rides the cluster-KEYED keep collection's scan as an
-      // IN predicate (the filter references only the LWW resolve's
-      // partition key, so it pushes below the window and segment
-      // stats/bloom prune the read); larger sets take a PLAIN semi-join
-      // — NOT a forced broadcast: the full-snapshot paths (first-cycle
-      // bootstrap, post-compaction/post-sweep re-derive) pass a
-      // corpus-proportional touched set that an explicit broadcast()
-      // would collect onto the driver (AQE still auto-broadcasts
-      // genuinely small over-bound sets from runtime stats). Never an
-      // unrestricted keep-list scan per window.
-      val touchedClusters = m.select(col("cluster")).distinct()
       val keepAll = keepListMaterialized(spark, keepPath)
-      val keep = graft.api.Collection
-        .boundedKeyLits(touchedClusters, graft.api.Collection.MaxKeyPushdown)
-        .fold(keepAll.join(touchedClusters, Seq("cluster"),
-          "left_semi"))(vs =>
-          if (vs.isEmpty) keepAll.limit(0)
-          else keepAll.filter(col("cluster").isin(vs: _*)))
+      // ONE bounded-or-materialized fetch of the window: a steady window
+      // touches a few hundred docs, so its (doc_id, cluster, keep_id)
+      // changes come from driver rows and ONE point read of the
+      // cluster-keyed keep-list. The full-snapshot paths (first-cycle
+      // bootstrap, post-compaction/post-sweep re-derive) are
+      // corpus-proportional and join the checkpointed frame instead.
+      // Either way keep_id is NULL for a touched cluster with no keep row.
+      val maxT = graft.api.Collection.MaxKeyPushdown
+      val (changes, nonEmpty, outOfStep) =
+        DedupOps.boundedOrMaterialized(resolved, maxT) match {
+          case Right(rows) =>
+            val m = rows.map(r => (r.getLong(0), r.getLong(1)))
+            val clusters = m.map(_._2).distinct.toSeq
+            val keepMap =
+              if (clusters.isEmpty) Map.empty[Long, Long]
+              else keepAll.filter(col("cluster").isin(clusters: _*))
+                .select(col("cluster"), col("keep_id")).collect()
+                .map(r => r.getLong(0) -> r.getLong(1)).toMap
+            import spark.implicits._
+            (m.toSeq.map { case (d, c) => (d, c, keepMap.get(c)) }
+              .toDF("doc_id", "cluster", "keep_id"),
+              m.nonEmpty, m.exists(t => !keepMap.contains(t._2)))
+          case Left(m) =>
+            // keeper lookup restricted to the window's TOUCHED clusters: a
+            // bounded set rides the cluster-KEYED keep collection's scan
+            // as an IN predicate (the filter references only the LWW
+            // resolve's partition key, so it pushes below the window and
+            // segment stats/bloom prune the read); larger sets take a
+            // PLAIN semi-join — NOT a forced broadcast, which would
+            // collect a corpus-proportional touched set onto the driver
+            // (AQE still auto-broadcasts genuinely small over-bound sets
+            // from runtime stats). Never an unrestricted keep-list scan.
+            val touchedClusters = m.select(col("cluster")).distinct()
+            val keep = graft.api.Collection
+              .boundedKeyLits(touchedClusters, maxT)
+              .fold(keepAll.join(touchedClusters, Seq("cluster"),
+                "left_semi"))(vs => keepAll.filter(col("cluster").isin(vs: _*)))
+            val ch = m
+              .join(keep.select(col("cluster"), col("keep_id")),
+                Seq("cluster"), "left")
+              .select(col("doc_id"), col("cluster"), col("keep_id"))
+              .localCheckpoint()
+            // an over-bound window is never empty
+            (ch, true, !ch.filter(col("keep_id").isNull).isEmpty)
+        }
       // LEFT join + loud gate, not an inner join: a touched cluster with
       // no keep row means the keep-list is OUT OF STEP with the state
       // (the signature of a sweep that crashed between its state and
@@ -1072,12 +1024,7 @@ object ClusterOps {
       // corrupting the drop list until an unrelated rewrite. Refuse
       // instead, naming the repair verb; the cursor does not move, so
       // the healed loop replays this window cleanly.
-      val changes = m
-        .join(keep.select(col("cluster"), col("keep_id")), Seq("cluster"),
-          "left")
-        .select(col("doc_id"), col("cluster"), col("keep_id"))
-        .localCheckpoint()
-      if (!changes.filter(col("keep_id").isNull).isEmpty)
+      if (outOfStep)
         throw new IllegalStateException(
           s"hadro: curationCycle found touched clusters with no row in " +
             s"the materialized keep-list at $keepPath — the keep-list is " +
@@ -1090,12 +1037,12 @@ object ClusterOps {
       val dropExists = graft.meta.CollectionMeta.collectionCommitted(
         java.nio.file.Paths.get(dropPath))
       if (!dropExists)
-        changes.filter(col("doc_id") =!= col("keep_id"))
-          .write.format("hadro").mode("overwrite")
-          .option("hadro.key", "doc_id").save(dropPath)
-      else if (!changes.isEmpty) // quiet window: no zero-row commit
-        graft.api.Collection(spark, dropPath)
-          .merge(changes, col("doc_id") === col("keep_id"))
+        save(typed(changes.filter(col("doc_id") =!= col("keep_id")),
+          "doc_id", "cluster", "keep_id"), dropPath, "overwrite")
+      else if (nonEmpty) // quiet window: no zero-row commit
+        graft.api.Collection(spark, dropPath).merge(
+          typed(changes, "doc_id", "cluster", "keep_id"),
+          col("doc_id") === col("keep_id"))
     }
     state.tags.get(cursorTag) match {
       case Some(f) if f >= head => () // caught up

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, engineered for the
@@ -628,7 +628,7 @@ object DedupOps {
     // exchange (the union-distinct) and one fewer pass over the candidate
     // set, with identical rows.
     // the new-side flags stay on the frame (boolean, non-null): the
-    // bounded fast path below derives each pair's OLD side driver-side
+    // bounded window below derives each pair's OLD side driver-side
     // from them with zero extra work. (Batch-id LITERAL predicates were
     // tried here instead of the broadcasts and measured WORSE: a
     // several-hundred-literal IN repeated across the probe's five
@@ -659,23 +659,19 @@ object DedupOps {
     if (!extendIndex && !eagerVerify && live.isEmpty)
       verified(restrictedPairs, allSets)
     else {
-      // BOUNDED DRIVER-SIDE CANDIDATE WINDOW: every materializing mode
-      // (extend — the nightly shape — eagerVerify, and the live gate,
-      // which always needed actions) starts with ONE bounded executeTake
-      // over the candidate pipeline. Within `maxIdPushdown` pairs — the
-      // nightly norm: candidates are hit-proportional — the pairs land
-      // in a driver-local relation, so the live gate, the verification
-      // join, the id pushdown, the empty-window check and the returned
-      // frame all read driver rows instead of re-materializing the
-      // banding pipeline per reference (r18's Profile measured the
-      // checkpoints this replaces at ~28 tiny AQE stage jobs per probe —
-      // the composed loops' per-window latency floor). Over bound,
-      // everything falls back to the r18 checkpoint/broadcast shape —
-      // nothing driver-resident beyond the bounded head, same results.
-      val fetched = restricted.head(maxIdPushdown + 1)
-      val fetchedTriple: (DataFrame, Option[Seq[Any]],
-          Option[Array[org.apache.spark.sql.Row]]) =
-        if (fetched.length <= maxIdPushdown) {
+      // ONE bounded-or-materialized fetch of the candidate window
+      // ([[boundedOrMaterialized]]) in every materializing mode (extend —
+      // the nightly shape — eagerVerify, and the live gate). Within
+      // `maxIdPushdown` pairs — the nightly norm: candidates are
+      // hit-proportional — the pairs land in a driver-local relation, so
+      // the live gate, the verification join, the id pushdown, the
+      // empty-window check and the returned frame all read driver rows.
+      // Over bound, the checkpointed candidate frame feeds the
+      // checkpoint/broadcast shape; the banding pipeline runs once either
+      // way.
+      val (cands, candLits, bounded) = boundedOrMaterialized(restricted,
+          maxIdPushdown) match {
+        case Right(fetched) =>
           val ia = restricted.schema.fieldIndex("doc_a")
           val ib = restricted.schema.fieldIndex("doc_b")
           val ifa = restricted.schema.fieldIndex("__new_a")
@@ -719,15 +715,16 @@ object DedupOps {
           val ids = kept.iterator
             .flatMap(r => Iterator(r.get(ia), r.get(ib))).toSeq.distinct
           (localDf, if (ids.size <= maxIdPushdown) Some(ids) else None,
-            Some(kept))
-        } else {
-          // over-bound fallback: the r18 shape. Delete-awareness first —
-          // the candidates' old-side ids broadcast into a map-only scan
-          // of `live`; the surviving set broadcasts back into the pair
-          // filter; both small frames checkpointed once (left lazy, the
-          // banding pipeline re-executes per reference — measured 9x).
-          val checked = live.fold(restrictedPairs) { lv =>
-            val cs = restrictedPairs.localCheckpoint()
+            true)
+        case Left(ck) =>
+          // over bound: delete-awareness first — the candidates' old-side
+          // ids broadcast into a map-only scan of `live`; the surviving set
+          // broadcasts back into the pair filter. The bounded id set then
+          // pushes into the keyed sets scan as an IN predicate (key bloom /
+          // key-offset pruned) when it fits, else the map-only
+          // broadcast-join scan
+          val cs = ck.select(col("doc_a"), col("doc_b"))
+          val checked = live.fold(cs) { lv =>
             val oldIds = cs.select(col("doc_a").as("doc_id"))
               .unionByName(cs.select(col("doc_b").as("doc_id")))
               .distinct()
@@ -741,18 +738,11 @@ object DedupOps {
               .join(broadcast(ok.withColumnRenamed("doc_id", "doc_b")),
                 Seq("doc_b"), "left_semi")
           }
-          // checkpoint once; the bounded id set pushes into the keyed
-          // sets scan as an IN predicate (key bloom / key-offset pruned)
-          // when it fits, else the map-only broadcast-join scan
-          val cs = checked.localCheckpoint()
-          val candIds = cs.select(col("doc_a").as("doc_id"))
-            .unionByName(cs.select(col("doc_b").as("doc_id"))).distinct()
-          (cs, graft.api.Collection.boundedKeyLits(candIds, maxIdPushdown),
-            None)
-        }
-      val cands = fetchedTriple._1
-      val candLits = fetchedTriple._2
-      val localRows = fetchedTriple._3
+          val candIds = checked.select(col("doc_a").as("doc_id"))
+            .unionByName(checked.select(col("doc_b").as("doc_id"))).distinct()
+          (checked, graft.api.Collection.boundedKeyLits(candIds, maxIdPushdown),
+            false)
+      }
       val src = candLits.fold(allSets)(vs =>
         allSets.filter(col("doc_id").isin(vs: _*)))
       if (!extendIndex) verified(cands, src)
@@ -764,18 +754,16 @@ object DedupOps {
       // into a driver-local relation — cheaper than a checkpoint,
       // equally mutation-proof, and the empty-window check is free.
       val vdf = verified(cands, src)
-      val resultPair: (DataFrame, () => Boolean) = localRows match {
-        case Some(_) =>
+      val (result, resultEmpty) =
+        if (bounded) {
           val rs = vdf.collect()
           val lst = new java.util.ArrayList[org.apache.spark.sql.Row](rs.length)
           rs.foreach(lst.add)
           (spark.createDataFrame(lst, vdf.schema), () => rs.isEmpty)
-        case None =>
+        } else {
           val r = vdf.localCheckpoint()
           (r, () => r.isEmpty)
-      }
-      val result = resultPair._1
-      val resultEmpty = resultPair._2
+        }
       // PERSISTED PAIR STREAM (the composed-pipeline seam): append the
       // window's pairs to an append-only hadro collection INSIDE the
       // lease, BEFORE the index mutates. Exactly-once across crash
@@ -967,6 +955,36 @@ object DedupOps {
       idx.compactSmall(1L << 30)
       ()
     }
+
+  /** The composed loop's ONE bounded-or-materialized window fetch: a lazy
+    * local checkpoint of `df`, then one job over all of its partitions
+    * that caches each partition and returns at most n + 1 of its rows.
+    * Within the bound the rows come back driver-side, in partition order
+    * (`Right`); over it, the checkpointed frame (`Left`), whose partitions
+    * that job already materialized, so the distributed branch reads the
+    * same execution instead of running the upstream pipeline again. One
+    * job, not a `head(n + 1)`: head's first job reads one partition, and
+    * the checkpoint then runs a job of its own for the rest. The driver
+    * keeps at most n rows, plus the one task result being handled. */
+  private[ops] def boundedOrMaterialized(df: DataFrame,
+      n: Int): Either[DataFrame, Array[Row]] = {
+    val ck = df.localCheckpoint(eager = false)
+    val schema = ck.schema
+    val rdd = ck.queryExecution.toRdd
+    val parts = new Array[Array[Row]](rdd.getNumPartitions)
+    var seen = 0L
+    df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(schema)
+        it.take(n + 1).map(r => toRow(r).asInstanceOf[Row]).toArray
+      },
+      (i: Int, part: Array[Row]) => {
+        seen += part.length
+        if (seen <= n) parts(i) = part
+      })
+    if (seen <= n) Right(parts.flatten) else Left(ck)
+  }
 
   /** PERSISTED sign-LSH index for INCREMENTAL EMBEDDING near-dup — the
     * [[minhashLshIndexBuild]] twin for the embedding modality (same

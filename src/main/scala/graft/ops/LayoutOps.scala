@@ -59,12 +59,6 @@ object LayoutOps {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** Morton-interleave up to 4 numeric columns into one long. */
-  def zValue(cols: Seq[Column], mins: Seq[Double], maxs: Seq[Double]): Column = {
-    require(cols.nonEmpty && cols.length <= 4, "z-order supports 1-4 columns")
-    interleave(cols.zipWithIndex.map { case (c, j) => bucket(c, mins(j), maxs(j)) })
-  }
-
   /** Rewrite `df` into a z-ordered layout frame: range-partitioned and
     * sorted by the interleaved key (dropped before returning — it is
     * transport, not data). Every dimension — numeric directly, strings

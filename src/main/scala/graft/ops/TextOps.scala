@@ -113,7 +113,12 @@ object TextOps {
     * summed through DECIMAL(27,12), so the score is bit-identical across
     * partitionings and engines (FP `sum(double)` would drift with
     * partial-aggregation order, and ln() can differ in the last ulp
-    * between libms). */
+    * between libms).
+    *
+    * Collision bound: tokens are counted and joined by their xxhash64,
+    * so two distinct tokens that share a hash pool their counts. Over a
+    * vocabulary of V distinct tokens the chance that ANY pair collides
+    * is at most the birthday bound V²/2⁶⁵ (about 3·10⁻⁸ for V = 10⁶). */
   def lmNllScores(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // token keys hashed to 8-byte longs before the vocabulary exchange
     // and the broadcast (the d09 discipline): the model relation carries
@@ -146,7 +151,13 @@ object TextOps {
     * and aggregation order. Model and scores are two hash aggregations +
     * one broadcast-or-shuffle join on the bigram key — no all-pairs, no
     * driver collections beyond the vocab size V. Docs with fewer than two
-    * tokens carry no bigram and emit no row. */
+    * tokens carry no bigram and emit no row.
+    *
+    * Collision bound: tokens and bigrams are counted and joined by their
+    * xxhash64, so two distinct keys that share a hash pool their counts.
+    * Over V distinct keys (tokens plus bigrams) the chance that ANY pair
+    * collides is at most the birthday bound V²/2⁶⁵ (about 3·10⁻⁸ for
+    * V = 10⁶). */
   def lmBigramNllScores(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -197,7 +208,13 @@ object TextOps {
     * tokens and vocabulary, never pairs, so the plan survives any corpus
     * size. Scores round to 4 decimals BEFORE ranking so ranks (and the
     * DuckDB twin) are deterministic; ties break to the lexicographically
-    * smaller term. Returns (doc_id, rk, term, score). */
+    * smaller term. Returns (doc_id, rk, term, score).
+    *
+    * Collision bound: document frequencies are keyed by each term's
+    * xxhash64, so two distinct terms that share a hash pool their
+    * frequencies. Over a vocabulary of V distinct terms the chance that
+    * ANY pair collides is at most the birthday bound V²/2⁶⁵ (about 3·10⁻⁸
+    * for V = 10⁶). */
   def bm25TopTerms(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val toks = df.select(col(idCol).as("doc_id"),
@@ -258,12 +275,6 @@ object TextOps {
       .filter(col("rk") <= k)
       .select(col("doc_id"), col("rk"), col("term"), col("score"))
   }
-
-  /** Estimated Jaccard from two MinHash signatures: fraction of agreeing
-    * components. */
-  def minhashEstimate(sigA: Column, sigB: Column): Column =
-    size(filter(zip_with(sigA, sigB, (a, b) => a === b), x => x)).cast("double") /
-      size(sigA).cast("double")
 
   /** Exact Jaccard between two (distinct) shingle arrays. |A∪B| comes from
     * |A|+|B|−|A∩B| (exact for distinct inputs — every caller passes

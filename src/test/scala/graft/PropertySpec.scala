@@ -6,7 +6,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 import graft.api.Collection
 
@@ -18,9 +17,6 @@ import graft.api.Collection
   */
 class PropertySpec extends SparkSuite {
   import spark.implicits._
-
-  private def samples[T](g: Gen[T], n: Int, seed: Long): Seq[T] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
   /** Protocol model checks run under BOTH [[graft.meta.FileIO]] impls —
     * trial parity picks one (even = POSIX LocalFileIO, odd = the

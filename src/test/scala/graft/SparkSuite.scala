@@ -8,6 +8,12 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sf0001 = "/root/testdata/sf0.001"
 
+  /** `n` deterministic draws of `g`, seeded `seed`, `seed + 1`, ... */
+  protected def samples[T](g: org.scalacheck.Gen[T], n: Int,
+      seed: Long): Seq[T] =
+    (0 until n).flatMap(i => g.apply(org.scalacheck.Gen.Parameters.default,
+      org.scalacheck.rng.Seed(seed + i)))
+
   /** Run `body` once per [[graft.meta.FileIO]] implementation — POSIX
     * rename/fsync semantics AND the object-store emulation (conditional
     * PUT, lease locks, no atomic rename) — so protocol model checks face

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.scalacheck.Gen
+
 import graft.SparkSuite
 
 /** Behavioral specs for the LLM-pipeline operators: planted near-dups must
@@ -1818,39 +1820,238 @@ class OpsSpec extends SparkSuite {
       "sets must be keyed for bloom/offset pruning")
   }
 
+  /** min-reachable-id labels of an edge list: the reference every loop
+    * path must reproduce. */
+  private def referenceComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long =
+      parent.get(x) match {
+        case Some(p) if p != x => val r = find(p); parent(x) = r; r
+        case _ => x
+      }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).toMap
+  }
+
+  /** (membership, materialized keep list, drop list) of a composed loop. */
+  private def loopOutputs(st: String, kp: String, dp: String) =
+    (ClusterOps.components(spark, st).as[(Long, Long)].collect().sorted.toSeq,
+      ClusterOps.keepListMaterialized(spark, kp)
+        .as[(Long, Long, Long)].collect().sorted.toSeq,
+      ClusterOps.dropList(spark, dp).select($"doc_id", $"cluster", $"keep_id")
+        .as[(Long, Long, Long)].collect().sorted.toSeq)
+
+  /** The outputs [[loopOutputs]] must equal for `labels` (node → root). */
+  private def expectedOutputs(labels: Map[Long, Long]) =
+    (labels.toSeq.sorted,
+      labels.groupBy(_._2).toSeq
+        .map { case (c, ms) => (c, ms.keys.min, ms.size.toLong) }.sorted,
+      labels.toSeq.filter { case (d, c) => d != c }
+        .map { case (d, c) => (d, c, c) }.sorted)
+
   test("componentsUpdate bounded driver fold matches the distributed fold " +
       "(same membership, same keep rows, either path)") {
-    import spark.implicits._
-    // one 1201-node chain. Folded as ONE 1200-pair window it exceeds the
-    // driver fast path's pair bound (MaxKeyPushdown) and takes the
-    // distributed alt-star fold; folded as two 600-pair windows each
-    // window fits the bound and takes the driver union-find (window 2
-    // additionally pulls window 1's cluster members — the member-fetch
-    // branch). Both must land the identical state and keep-list.
-    val dir = java.nio.file.Files.createTempDirectory("dfold").toString
-    val st1 = s"$dir/s1"; val kp1 = s"$dir/k1"
-    val st2 = s"$dir/s2"; val kp2 = s"$dir/k2"
-    ClusterOps.componentsUpdate(spark,
-      (0L until 1200L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
-      st1, keepPath = Some(kp1))
-    ClusterOps.componentsUpdate(spark,
-      (0L until 600L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
-      st2, keepPath = Some(kp2))
-    ClusterOps.componentsUpdate(spark,
-      (600L until 1200L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
-      st2, keepPath = Some(kp2))
-    val m1 = ClusterOps.components(spark, st1)
-      .as[(Long, Long)].collect().sorted.toSeq
-    val m2 = ClusterOps.components(spark, st2)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(m1 == m2, s"fold paths diverged: ${m1.take(5)} vs ${m2.take(5)}")
-    assert(m1.forall(_._2 == 0L) && m1.size == 1201, m1.take(5).toString)
-    val k1 = ClusterOps.keepListMaterialized(spark, kp1)
-      .as[(Long, Long, Long)].collect().sorted.toSeq
-    val k2 = ClusterOps.keepListMaterialized(spark, kp2)
-      .as[(Long, Long, Long)].collect().sorted.toSeq
-    assert(k1 == Seq((0L, 0L, 1201L)), k1.toString)
-    assert(k1 == k2, s"keep lists diverged: $k1 vs $k2")
+    // Seeded pair graphs: chains, stars, merges that hang a new chain off
+    // an earlier node, and bridges between two earlier nodes (which merge
+    // two earlier clusters). Ids are a permutation of the creation order,
+    // so a merge can re-root an earlier cluster. Each graph folds in
+    // windows of 999 and 1000 pairs (the driver union-find: pairs within
+    // the MaxKeyPushdown bound), 1001 pairs (the distributed alt-star
+    // fold) and as one window, with a curation cycle after every window;
+    // the 1000-pair cut also runs with maxIdPushdown = 0 (no IN lists).
+    // Curation windows land on both sides of its own bound.
+    val genPiece = for {
+      kind <- Gen.frequency(3 -> 0, 3 -> 1, 2 -> 2, 2 -> 3)
+      size <- Gen.choose(5, 150)
+      u <- Gen.choose(0.0, 1.0)
+      v <- Gen.choose(0.0, 1.0)
+    } yield (kind, size, u, v)
+    def expand(pieces: List[(Int, Int, Double, Double)]): Seq[(Long, Long)] = {
+      val edges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      var next = 0L
+      def fresh(): Long = { next += 1; (next * 7919L) % 100003L }
+      val nodes = scala.collection.mutable.ArrayBuffer.empty[Long]
+      def earlier(f: Double): Long = nodes((f * nodes.size).toInt min (nodes.size - 1))
+      def add(a: Long, b: Long, flip: Boolean): Unit =
+        edges += (if (flip) (b, a) else (a, b))
+      pieces.foreach { case (kind, size, u, v) =>
+        if (edges.size < 2300) kind match {
+          case 0 | 2 => // chain; a merge also hangs it off an earlier node
+            val chain = Seq.fill(size)(fresh())
+            chain.sliding(2).foreach(w => add(w(0), w(1), u < 0.5))
+            if (kind == 2 && nodes.nonEmpty) add(earlier(u), chain.head, v < 0.5)
+            nodes ++= chain
+          case 1 => // star
+            val center = fresh()
+            val leaves = Seq.fill(size)(fresh())
+            leaves.foreach(l => add(center, l, u < 0.5))
+            nodes += center; nodes ++= leaves
+          case _ => // bridge between two earlier clusters
+            if (nodes.size > 1) add(earlier(u), earlier(v), false)
+        }
+      }
+      edges.toSeq
+    }
+    samples(Gen.listOfN(80, genPiece).map(expand), 2, seed = 1821)
+      .zipWithIndex.foreach { case (edges, trial) =>
+        assert(edges.size > 2002, s"[$trial] graph too small: ${edges.size}")
+        val expected = expectedOutputs(referenceComponents(edges))
+        Seq((999, graft.api.Collection.MaxKeyPushdown),
+          (1000, graft.api.Collection.MaxKeyPushdown), (1000, 0),
+          (1001, graft.api.Collection.MaxKeyPushdown),
+          (edges.size, graft.api.Collection.MaxKeyPushdown))
+          .foreach { case (window, pushdown) =>
+            val dir = java.nio.file.Files.createTempDirectory("dfold").toString
+            val (st, kp, dp) = (s"$dir/s", s"$dir/k", s"$dir/d")
+            edges.grouped(window).foreach { w =>
+              ClusterOps.componentsUpdate(spark, w.toDF("a", "b"), "a", "b",
+                st, maxIdPushdown = pushdown, keepPath = Some(kp))
+              ClusterOps.curationCycle(spark, st, "cur", kp, dp)
+            }
+            val got = loopOutputs(st, kp, dp)
+            val tag = s"[$trial window=$window pushdown=$pushdown]"
+            assert(got._1 == expected._1, s"$tag membership diverged")
+            assert(got._2 == expected._2, s"$tag keep list diverged")
+            assert(got._3 == expected._3, s"$tag drop list diverged")
+          }
+      }
+  }
+
+  test("the composed loop's probe, fold and curation agree with and without " +
+      "id pushdown (probe pairs, membership, keep and drop lists)") {
+    // Seeded near-dup corpora realizing chains, stars and merges: a chain
+    // node replaces one more token of its predecessor's text (neighbours
+    // differ by one token, two apart by two: Jaccard about 0.85 vs 0.73
+    // on 3-shingles, so only neighbours pass the 0.8 threshold); a star
+    // leaf replaces one token of the centre; a merge copies a node of the
+    // first window with its last token replaced. maxIdPushdown = 0 sends
+    // every probe window down the over-bound candidate path.
+    val genPiece = for {
+      kind <- Gen.oneOf(0, 1)
+      size <- Gen.choose(2, 12)
+    } yield (kind, size)
+    val genCorpus = for {
+      first <- Gen.listOfN(6, genPiece)
+      second <- Gen.listOfN(4, genPiece)
+      merges <- Gen.listOfN(6, Gen.choose(0.0, 1.0))
+    } yield (first, second, merges)
+    samples(genCorpus, 2, seed = 4242).zipWithIndex.foreach {
+      case ((first, second, merges), trial) =>
+        var next = 0L
+        def realize(pieces: List[(Int, Int)]): Seq[(Long, String)] =
+          pieces.flatMap { case (kind, size) =>
+            val p = next
+            val base = (0 until 40).map(j => s"p${p}t$j").toVector
+            def text(toks: Vector[String]) = toks.mkString(" ")
+            val docs = kind match {
+              case 0 => (0 to size).map(k => text((1 to k).foldLeft(base)(
+                (t, j) => t.updated(3 * j, s"p${p}c$j"))))
+              case _ => text(base) +: (1 to size).map(j =>
+                text(base.updated(3 * j, s"p${p}s$j")))
+            }
+            docs.map { t => next += 1; (next, t) }
+          }
+        val w1 = realize(first)
+        val w2 = realize(second) ++ merges.map { f =>
+          val (_, t) = w1((f * w1.size).toInt min (w1.size - 1))
+          next += 1
+          (next, t.split(" ").updated(39, s"m$next").mkString(" "))
+        }
+        val runs = Seq(graft.api.Collection.MaxKeyPushdown, 0).map { pushdown =>
+          val dir = java.nio.file.Files.createTempDirectory("probeloop").toString
+          val (idx, pp) = (s"$dir/idx", s"$dir/pairs")
+          val (st, kp, dp) = (s"$dir/s", s"$dir/k", s"$dir/d")
+          DedupOps.minhashLshIndexBuild(Seq.empty[(Long, String)]
+            .toDF("doc_id", "text"), "doc_id", "text", idx)
+          val probed = Seq(w1, w2).zipWithIndex.flatMap { case (w, i) =>
+            val out = DedupOps.minhashLshIndexProbe(spark,
+              w.toDF("doc_id", "text"), "doc_id", "text", idx,
+              maxIdPushdown = pushdown, pairsSink = Some((pp, i.toLong)))
+              .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSeq
+            ClusterOps.componentsCycle(spark, pp, "cur", st, keepPath = Some(kp))
+            ClusterOps.curationCycle(spark, st, "drop", kp, dp)
+            out
+          }.sorted
+          (probed, loopOutputs(st, kp, dp))
+        }
+        val (pairs, outputs) = runs.head
+        assert(pairs.nonEmpty, s"[$trial] the corpus produced no pairs")
+        assert(runs(1)._1 == pairs, s"[$trial] probe pairs diverged")
+        assert(runs(1)._2 == outputs, s"[$trial] loop outputs diverged")
+        assert(outputs == expectedOutputs(referenceComponents(pairs)),
+          s"[$trial] loop outputs differ from the probe pairs' components")
+    }
+  }
+
+  test("bounded and over-bound windows store the same state, keep-list " +
+      "and drop-list schemas") {
+    def run(pairs: Int): Seq[org.apache.spark.sql.types.StructType] = {
+      val dir = java.nio.file.Files.createTempDirectory("schemas").toString
+      val (st, kp, dp) = (s"$dir/s", s"$dir/k", s"$dir/d")
+      ClusterOps.componentsUpdate(spark,
+        (0L until pairs.toLong).map(i => (i, i + 1)).toDF("a", "b"), "a", "b",
+        st, keepPath = Some(kp))
+      ClusterOps.curationCycle(spark, st, "cur", kp, dp)
+      Seq(st, kp, dp).map(p => graft.meta.CollectionMeta
+        .readSchema(java.nio.file.Paths.get(p)).get.schema)
+    }
+    // 600 pairs / 601 docs fit both windows' bounds; 1200 / 1201 exceed them
+    Seq("state", "keep list", "drop list").zip(run(600).zip(run(1200)))
+      .foreach { case (what, (bounded, overBound)) =>
+        assert(bounded == overBound, s"$what schema differs: " +
+          s"${bounded.toDDL} vs ${overBound.toDDL}")
+      }
+  }
+
+  test("boundedOrMaterialized evaluates its input once over bound and " +
+      "costs a plain head's jobs within it") {
+    val evals = spark.sparkContext.longAccumulator("boundedOrMaterialized")
+    val counted = udf((x: Long) => { evals.add(1); x })
+    def input(rows: Long) = spark.range(rows)
+      .select(counted($"id").as("v"))
+      .groupBy(($"v" % 97).as("k")).agg(count(lit(1)).as("c"))
+    // over bound: one pass for the fetch and the frame's later use; the
+    // head-then-checkpoint idiom runs the upstream pipeline twice
+    evals.reset()
+    val over = DedupOps.boundedOrMaterialized(input(5000), 10)
+    assert(over.isLeft && over.swap.toOption.get.count() == 97L)
+    assert(evals.value == 5000L, s"over-bound fetch evaluated ${evals.value}")
+    evals.reset()
+    val twice = input(5000)
+    assert(twice.head(11).length > 10 && twice.localCheckpoint().count() == 97L)
+    assert(evals.value == 10000L, s"head + checkpoint evaluated ${evals.value}")
+    // within bound: the same job count as a plain head(n + 1)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (e.properties.getProperty("spark.jobGroup.id") == "bom")
+          jobs.incrementAndGet()
+        ()
+      }
+    }
+    def jobsOf(body: => Unit): Int = {
+      jobs.set(0)
+      spark.sparkContext.setJobGroup("bom", "boundedOrMaterialized")
+      try body finally spark.sparkContext.clearJobGroup()
+      // listener events arrive asynchronously: wait for a stable count
+      var (prev, waited) = (-1, 0)
+      while (waited < 10000 && prev != jobs.get()) {
+        prev = jobs.get(); Thread.sleep(500); waited += 500
+      }
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val viaHead = jobsOf(assert(input(500).head(1001).length == 97))
+      val viaFetch = jobsOf(assert(
+        DedupOps.boundedOrMaterialized(input(500), 1000).toOption.get.length == 97))
+      assert(viaHead > 0 && viaFetch == viaHead,
+        s"bounded fetch ran $viaFetch jobs, plain head $viaHead")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("LSH index probe never emits an old-old pair, even when mustCheck " +
